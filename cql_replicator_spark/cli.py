@@ -4,7 +4,7 @@ Mirrors the reference's bash orchestrator dispatch (glue/bin/cqlreplicator
 C:1431-1710: run / stats / request-stop / reconcile-keys, plus DLQ
 replay) against this engine's offline-testable wiring: a parquet source
 table replicated to a parquet target through the tiling -> snapshot ->
-ledger -> diff -> bulk-hydration pipeline. On a cluster the same
+ledger -> diff -> hydrate pipeline. On a cluster the same
 commands run under spark-submit; only the source/sink factories change.
 
     python -m cql_replicator_spark.cli run --source /data/orders \\
@@ -43,7 +43,7 @@ def _load_mapping(args):
 def _pipeline(spark, args):
     from .ledger import Ledger
     from .runner import CdcPipeline, StatsStore
-    from .sinks.parquet_sink import bulk_replicate_to_parquet
+    from .sinks.parquet_sink import write_with_size_control
     from .snapshot import SnapshotStore
     from .transform import build_source_pipeline
 
@@ -61,22 +61,10 @@ def _pipeline(spark, args):
         return df.select(*pk_cols, ts.alias("ts"))
 
     def sink(changes, tile, batch_id):
-        if not args.target:
-            return
-        # snapshot id from the replication plan: unique per rotation, so
-        # back-to-back cycles never overwrite each other's delta (a
-        # second-resolution timestamp would collide under --cooldown 0)
-        batch = f"snap-{batch_id:08d}"
-        for op, pks in (("insert", changes.inserts), ("update", changes.updates)):
-            if pks.limit(1).count():
-                bulk_replicate_to_parquet(
-                    source(), pks, pk_cols, args.target, KEYSPACE, table,
-                    tile, op, batch)
-        deletes = changes.deletes.select(*pk_cols)
-        if deletes.limit(1).count():
-            out = os.path.join(args.target, KEYSPACE, table, str(tile),
-                               "delete", batch)
-            deletes.write.mode("overwrite").parquet(out)
+        for op in ("insert", "update", "delete"):
+            if changes.counts[op]:
+                write_with_size_control(getattr(changes, op + "s"), os.path.join(
+                    args.target, KEYSPACE, table, str(tile), op, f"snap-{batch_id:08d}"))
 
     return CdcPipeline(
         spark=spark, keyspace=KEYSPACE, table=table, pk_cols=pk_cols,
@@ -85,8 +73,7 @@ def _pipeline(spark, args):
         ledger=Ledger(os.path.join(args.workdir, "ledger.json")),
         stats=StatsStore(os.path.join(args.workdir, "stats")),
         total_tiles=args.tiles,
-        ts_col="ts",
-        sink=sink,
+        sink=sink if args.target else None,
     )
 
 

@@ -161,9 +161,10 @@ def replicate_counter_tile(
     write_cfg: WriteConfig | None = None,
 ) -> dict | None:
     """One tile's counter replication cycle, ledger-gated like
-    CdcPipeline.replicate_tile: historical load emits full-value
-    updates for every key; a delta cycle emits increments/deletes
-    between the two snapshot generations."""
+    CdcPipeline.replicate. As there, a historical tile diffs against an
+    empty prev, so its load emits full-value updates for every key; a
+    delta cycle emits increments/deletes between the two snapshot
+    generations."""
     plan = ledger.replication_plan(keyspace, table, tile)
     if plan is None:
         return None

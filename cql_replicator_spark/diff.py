@@ -19,9 +19,9 @@ the same behavior without the fake column comparison.
 
 Scale note: all three outputs are plain equi-joins on the PK columns, so
 Catalyst plans them as shuffle-hash/sort-merge joins sharing one
-exchange per side when executed together; at 100 TB per-tile snapshots
-this is the one unavoidable shuffle, and tiling keeps each join to 1/N
-of the key space.
+exchange per side when executed together; at 100 TB this is the one
+unavoidable shuffle. The runner diffs every due tile in one join keyed
+on (tile, pk), so one cycle pays that shuffle once.
 """
 
 from __future__ import annotations
@@ -33,7 +33,8 @@ from pyspark.sql import functions as F
 
 
 @dataclass
-class ChangeSet:
+class KeyChanges:
+    """Key-level diff of two snapshots (compute_changes)."""
     inserts: DataFrame
     deletes: DataFrame
     updates: DataFrame
@@ -45,6 +46,13 @@ class ChangeSet:
             .unionByName(self.deletes.withColumn(op_col, F.lit("delete")))
             .unionByName(self.updates.withColumn(op_col, F.lit("update")))
         )
+
+
+@dataclass
+class ChangeSet(KeyChanges):
+    """What the runner hands a sink for one tile: full source rows for inserts
+    and updates, keys for deletes, and per-op counts ({"insert": n, ...})."""
+    counts: dict[str, int]
 
 
 def compute_changes_tagged(
@@ -112,23 +120,13 @@ def compute_changes_envelope(
     )
 
 
-def changeset_from_tagged(tagged: DataFrame, op_col: str = "op") -> ChangeSet:
-    """Split a (persisted!) tagged diff into the three-set view. Persist
-    the tagged frame first or the join re-executes per subset."""
-    return ChangeSet(
-        inserts=tagged.filter(F.col(op_col) == "insert").drop(op_col),
-        deletes=tagged.filter(F.col(op_col) == "delete").drop(op_col),
-        updates=tagged.filter(F.col(op_col) == "update").drop(op_col),
-    )
-
-
 def compute_changes(
     curr: DataFrame,
     prev: DataFrame,
     pk_cols: list[str],
     ts_col: str = "ts",
     has_ts: bool = True,
-) -> ChangeSet:
+) -> KeyChanges:
     """Diff two snapshots of (pk_cols..., ts)."""
     inserts = curr.join(prev, pk_cols, "left_anti")
     deletes = prev.join(curr, pk_cols, "left_anti")
@@ -145,10 +143,10 @@ def compute_changes(
         updates = curr.filter(F.lit(False)).select(*pk_cols, *(
             [F.col(ts_col)] if ts_col in curr.columns else []
         ))
-    return ChangeSet(inserts=inserts, deletes=deletes, updates=updates)
+    return KeyChanges(inserts=inserts, deletes=deletes, updates=updates)
 
 
-def apply_changes(base: DataFrame, changes: ChangeSet,
+def apply_changes(base: DataFrame, changes: KeyChanges,
                   pk_cols: list[str]) -> DataFrame:
     """MERGE semantics — apply a change set to the previous snapshot:
     delete removed keys, upsert inserted/updated rows. By construction

@@ -12,12 +12,12 @@ Reimplements the reference's job structure (SURVEY §3):
     aggregation-on-write putStats K:759-785).
 
 Driver-side tile fan-out uses a thread pool (the reference uses Scala
-.par — K:2258); each tile's work is an independent Spark job, so the
-cluster pipelines them.
+.par — K:2258) for the per-tile snapshot writes, reads and sink writes;
+a replication cycle diffs, counts and hydrates once for all due tiles.
 
-The source is any callable returning a DataFrame with the PK columns
-(+ optional ts): a Cassandra connector reader in production, parquet
-fixtures in tests — the engine core is source-agnostic (SURVEY §7.1).
+Both sources are callables returning a DataFrame (``pk_source`` the PK +
+ts projection, ``source`` the full rows): a Cassandra connector reader in
+production, parquet fixtures in tests — the core is source-agnostic (SURVEY §7.1).
 """
 
 from __future__ import annotations
@@ -27,15 +27,19 @@ import os
 import time
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .diff import ChangeSet, changeset_from_tagged, compute_changes_tagged
+from .diff import ChangeSet, compute_changes_tagged
 from .ledger import DiscoveryRaceLost, Ledger
+from .sinks import parquet_sink
 from .snapshot import SnapshotStore
 from .tiling import assign_tiles
+
+TILE, OP = "__tile", "__op"  # a replication cycle's row tags
 
 
 @dataclass
@@ -118,16 +122,15 @@ class CdcPipeline:
     keyspace: str
     table: str
     pk_cols: list[str]
-    source: Callable[[], DataFrame]          # full source table
+    source: Callable[[], DataFrame]          # full rows, scanned once per cycle to hydrate
     pk_source: Callable[[], DataFrame]       # (pk_cols..., ts) projection
     store: SnapshotStore
     ledger: Ledger
     stats: StatsStore
     total_tiles: int = 4
     ts_col: str = "ts"
-    # (changes, tile, batch_id) — batch_id is the consumed curr snapshot id,
-    # unique per rotation, so two cycles can never collide on a sink path
-    # (a wall-clock batch id collides when cycles are < 1s apart).
+    # (changes, tile, batch_id): hydrated rows + op counts, and the consumed curr
+    # snapshot id, unique per rotation so sink paths never collide. None = count only.
     sink: Callable[[ChangeSet, int, int], None] | None = None
     max_workers: int = 4
     # Discovery-scan layout: when set, the tiled projection is
@@ -211,45 +214,58 @@ class CdcPipeline:
             tiled.unpersist()
 
     # -- replication --------------------------------------------------------
-    def replicate_tile(self, tile: int) -> ReplicationStats | None:
-        plan = self.ledger.replication_plan(self.keyspace, self.table, tile)
-        if plan is None:
-            return None
-        curr = self.store.read_snapshot(self.spark, tile, plan["curr"])
-        tagged = None
-        try:
-            if plan["mode"] == "historical":
-                # full load: everything in curr is an insert (K:1660-1674)
-                empty = curr.filter(F.lit(False))
-                changes = ChangeSet(inserts=curr, deletes=empty, updates=empty)
-                n_ins, n_del, n_upd = curr.count(), 0, 0
-            else:
-                prev = self.store.read_snapshot(self.spark, tile, plan["prev"])
-                # single-pass diff: one full-outer join, materialized once,
-                # then counts and the three-set sink view reuse the cache
-                tagged = compute_changes_tagged(
-                    curr, prev, self.pk_cols, self.ts_col).persist()
-                counts = {r["op"]: r["count"]
-                          for r in tagged.groupBy("op").count().collect()}
-                n_ins = counts.get("insert", 0)
-                n_del = counts.get("delete", 0)
-                n_upd = counts.get("update", 0)
-                changes = changeset_from_tagged(tagged)
-            if self.sink is not None:
-                self.sink(changes, tile, plan["curr"])
-        finally:
-            if tagged is not None:
-                tagged.unpersist()
+    def replicate_tile(self, tile: int, batch_id: int, changes: ChangeSet) -> ReplicationStats:
+        """Finish one due tile: sink -> mark -> expiry -> stats. A crash
+        before the mark leaves it due, and the next cycle re-writes ``batch_id``."""
+        if self.sink is not None:
+            self.sink(changes, tile, batch_id)
         self.ledger.mark_replication_complete(self.keyspace, self.table, tile)
         self.store.expire_snapshots(tile, retain_last=2)  # K:1656-1657
-        st = ReplicationStats(tile, n_ins + n_del + n_upd, n_upd, n_ins, n_del, time.time())
+        n = changes.counts
+        st = ReplicationStats(tile, sum(n.values()), n["update"], n["insert"],
+                              n["delete"], time.time())
         self.stats.put(self.keyspace, self.table, st)
         return st
 
     def replicate(self) -> list[ReplicationStats]:
+        """One replication cycle (K:1564-1681) over every due tile: one
+        diff of the tile-tagged snapshot unions, one count and, with a
+        sink, one hydrate against one source scan. A historical tile has
+        no prev rows, so all its keys diff as inserts (K:1660-1674)."""
+        plans = {t: p for t in range(self.total_tiles) if (
+            p := self.ledger.replication_plan(self.keyspace, self.table, t))}
+        if not plans:
+            return []
+        reads = [(t, p[k]) for k in ("curr", "prev") for t, p in plans.items() if k in p]
         with ThreadPoolExecutor(max_workers=self.max_workers) as pool:
-            out = list(pool.map(self.replicate_tile, range(self.total_tiles)))
-        return [s for s in out if s is not None]
+            snaps = list(pool.map(lambda r: self.store.read_snapshot(
+                self.spark, *r).withColumn(TILE, F.lit(r[0])), reads))
+            curr = reduce(DataFrame.unionByName, snaps[:len(plans)])
+            prev = reduce(DataFrame.unionByName, snaps[len(plans):] or [curr.filter(F.lit(False))])
+            tagged = rows = compute_changes_tagged(
+                curr, prev, [TILE, *self.pk_cols], self.ts_col, op_col=OP).persist()
+            try:
+                counts = {(r[TILE], r[OP]): r["count"]
+                          for r in tagged.groupBy(TILE, OP).count().collect()}
+                if self.sink is not None:
+                    # one source scan, persisted for every write; no broadcast
+                    # hint, as a historical load's keys are the whole table
+                    keys = tagged.filter(F.col(OP) != "delete").select(TILE, OP, *self.pk_cols)
+                    rows = parquet_sink.hydrate_changes(self.source(), keys, self.pk_cols,
+                                                        broadcast_pks=False)
+                    rows = rows.dropDuplicates(self.pk_cols).persist()  # P:647
+
+                def part(df: DataFrame, t: int, op: str) -> DataFrame:
+                    return df.filter((F.col(TILE) == t) & (F.col(OP) == op)).drop(TILE, OP)
+
+                return list(pool.map(lambda t: self.replicate_tile(t, plans[t]["curr"], ChangeSet(
+                    inserts=part(rows, t, "insert"), updates=part(rows, t, "update"),
+                    deletes=part(tagged, t, "delete").select(*self.pk_cols),
+                    counts={op: counts.get((t, op), 0) for op in ("insert", "update", "delete")},
+                )), plans))
+            finally:
+                tagged.unpersist()
+                rows.unpersist()
 
     # -- loop -----------------------------------------------------------------
     def run_loop(

@@ -1,9 +1,9 @@
 """Parquet target sink — the bulk (Spark-native) replication path.
 
 This is the path SURVEY §7.1 says to prefer: instead of per-row
-``SELECT json`` hydration (K:825-852), broadcast-join the changed PK
-set back to the source DataFrame and write Parquet directly
-(bulkReplicateToParquet P:792-857):
+``SELECT json`` hydration (K:825-852), join the changed PK set back to
+the source DataFrame (the runner does it once per cycle for all due
+tiles) and write Parquet directly (bulkReplicateToParquet P:792-857):
 
   source ⋈ broadcast(changed_pks) -> optional TTL filter ->
   size-estimated coalesce -> parquet {root}/{ks}/{tbl}/{tile}/{op}/
@@ -36,10 +36,9 @@ def hydrate_changes(
 ) -> DataFrame:
     """Changed-PK set -> full source rows (P:809-816). PK columns are
     aligned by name and cast to the source's types before the join
-    (the reference casts explicitly; names are enough here)."""
-    keys = changed_pks.select(*pk_cols)
-    for c in pk_cols:
-        keys = keys.withColumn(c, F.col(c).cast(source.schema[c].dataType))
+    (the reference casts explicitly; names are enough here). Other columns
+    of ``changed_pks`` (the runner's tile and op tags) ride along."""
+    keys = changed_pks.withColumns({c: F.col(c).cast(source.schema[c].dataType) for c in pk_cols})
     if broadcast_pks:
         keys = F.broadcast(keys)
     return source.join(keys, pk_cols, "inner")
@@ -77,7 +76,7 @@ def bulk_replicate_to_parquet(
     from ..stats import estimate_partitions_for_write
     from ..transform import apply_ttl_filter
 
-    hydrated = hydrate_changes(source, changed_pks, pk_cols)
+    hydrated = hydrate_changes(source, changed_pks.select(*pk_cols), pk_cols)
     if ttl_filter is not None:
         col, pred, val = ttl_filter
         hydrated = apply_ttl_filter(hydrated, col, pred, val)

@@ -115,25 +115,32 @@ def test_simhash_hamming_pairs_recall_and_exactness(spark, docs):
     """Planted near-dups (first word dropped) flip few signature bits;
     the banded pairing must recover most of them, every emitted pair
     must genuinely be within the Hamming threshold, and bucketing must
-    lose nothing vs the brute-force O(n²) check (pigeonhole guarantee)."""
+    lose nothing vs the brute-force O(n²) check (pigeonhole guarantee).
+    The id column may share a name with an internal alias ("h", "s3")."""
     sample = docs.limit(60)
     mutated = sample.select(
         (F.col("doc_id") + 10_000).alias("doc_id"),
         F.expr("substring(text, instr(text, ' ') + 1)").alias("text"))
-    corpus = sample.unionByName(mutated)
-    out = D.simhash_hamming_pairs(corpus, max_hamming=3)
-    found = {(r.id_a, r.id_b): r.hamming for r in out.collect()}
-    assert all(h <= 3 for h in found.values())
-    planted = {(r.doc_id, r.doc_id + 10_000) for r in sample.collect()}
-    recall = len(planted & set(found)) / len(planted)
-    assert recall >= 0.8, f"SimHash Hamming recall {recall}"
-    # exactness: identical to the all-pairs form (no bucketing loss)
-    sigs = {r.doc_id: r.simhash for r in D.simhash_signatures(corpus).collect()}
-    ids = sorted(sigs)
-    brute = {(a, b): bin(sigs[a] ^ sigs[b]).count("1")
-             for i, a in enumerate(ids) for b in ids[i + 1:]
-             if bin(sigs[a] ^ sigs[b]).count("1") <= 3}
-    assert found == brute
+    base = sample.unionByName(mutated)
+    results = {}
+    for id_col in ("doc_id", "h", "s3"):
+        corpus = base.withColumnRenamed("doc_id", id_col)
+        out = D.simhash_hamming_pairs(corpus, id_col=id_col, max_hamming=3)
+        found = {(r.id_a, r.id_b): r.hamming for r in out.collect()}
+        assert all(h <= 3 for h in found.values())
+        planted = {(r.doc_id, r.doc_id + 10_000) for r in sample.collect()}
+        recall = len(planted & set(found)) / len(planted)
+        assert recall >= 0.8, f"SimHash Hamming recall {recall}"
+        # exactness: identical to the all-pairs form (no bucketing loss)
+        sigs = {r[id_col]: r.simhash
+                for r in D.simhash_signatures(corpus, id_col=id_col).collect()}
+        ids = sorted(sigs)
+        brute = {(a, b): bin(sigs[a] ^ sigs[b]).count("1")
+                 for i, a in enumerate(ids) for b in ids[i + 1:]
+                 if bin(sigs[a] ^ sigs[b]).count("1") <= 3}
+        assert found == brute
+        results[id_col] = found
+    assert results["h"] == results["s3"] == results["doc_id"]
 
 
 def test_simhash_hamming_pairs_param_guards(spark, docs):

@@ -33,6 +33,15 @@ def test_cli_full_cycle_and_stats(spark, tmp_path, capsys):
     n_src = spark.read.parquet(src).count()
     written = spark.read.parquet(os.path.join(target, "default", "orders", "*", "insert", "*"))
     assert written.count() == n_src
+    # ... and nothing else: no update or delete batch for an empty op
+    tiles_root = os.path.join(target, "default", "orders")
+
+    def batches():
+        return {(tile, op, b) for tile in os.listdir(tiles_root)
+                for op in os.listdir(os.path.join(tiles_root, tile))
+                for b in os.listdir(os.path.join(tiles_root, tile, op))}
+    first = batches()
+    assert {op for _, op, _ in first} == {"insert"}
 
     code, out = _run(capsys, ["stats", *base])
     assert code == 0
@@ -44,6 +53,7 @@ def test_cli_full_cycle_and_stats(spark, tmp_path, capsys):
     assert code == 0
     code, out = _run(capsys, ["stats", *base])
     assert out[0]["replicated"] == n_src
+    assert batches() == first  # no empty snap-* batch for an unchanged cycle
 
     # reconcile source against the replicated inserts -> in sync, exit 0
     code, out = _run(capsys, [

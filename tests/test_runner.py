@@ -27,7 +27,7 @@ def _make_pipeline(spark, tables, tmp_path, sink=None, mod=10):
     state = {"mod": mod}
     return CdcPipeline(
         spark=spark, keyspace="tpch", table="orders", pk_cols=["pk"],
-        source=lambda: orders,
+        source=lambda: orders.withColumn("pk", F.col("o_orderkey")),
         pk_source=lambda: base.filter(F.col("pk") % state["mod"] != 0),
         store=SnapshotStore(str(tmp_path / "snaps"), "tpch", "orders"),
         ledger=Ledger(str(tmp_path / "ledger.json")),
@@ -39,8 +39,9 @@ def _make_pipeline(spark, tables, tmp_path, sink=None, mod=10):
 def test_cdc_pipeline_full_cycle(spark, tables, tmp_path):
     captured = []
     pipe, state = _make_pipeline(spark, tables, tmp_path)
-    pipe.sink = lambda changes, tile, batch_id: captured.append(
-        (tile, changes.inserts.count(), changes.deletes.count(), changes.updates.count()))
+    pipe.sink = lambda changes, tile, batch_id: captured.append((tile, changes.counts, {
+        "insert": changes.inserts.count(), "update": changes.updates.count(),
+        "delete": changes.deletes.count()}))
 
     # cycle 1: historical load
     assert sorted(pipe.discover()) == [0, 1, 2, 3]
@@ -48,6 +49,8 @@ def test_cdc_pipeline_full_cycle(spark, tables, tmp_path):
     assert len(stats1) == 4
     total_loaded = sum(s.insertedPrimaryKeys for s in stats1)
     assert total_loaded == pipe.pk_source().count()
+    # the runner's op counts are the counts of the frames it hands the sink
+    assert all(counts == frames for _, counts, frames in captured)
 
     # cycle 2: mutate source (mod 10 -> 7), expect delta
     state["mod"] = 7
@@ -61,6 +64,7 @@ def test_cdc_pipeline_full_cycle(spark, tables, tmp_path):
     t1 = {k for k in keys if k % 7 != 0}
     assert ins == len(t1 - t0) and dels == len(t0 - t1)
     assert len(captured) == 4  # sink invoked per tile
+    assert all(counts == frames for _, counts, frames in captured)
 
     # stats aggregated on disk
     st = pipe.stats.get("tpch", "orders", 0, "replication")
@@ -123,6 +127,45 @@ def test_discovery_lost_race_skips_tile_not_cycle(spark, tables, tmp_path):
     # the lost tile replicates the RIVAL's snapshot id on the next pass
     plan = pipe.ledger.replication_plan("tpch", "orders", 1)
     assert plan == {"mode": "historical", "curr": 777}
+
+
+def test_replicate_mixes_historical_and_delta_tiles(spark, tables, tmp_path):
+    """One replicate() over a tile on its first rotation and tiles on a
+    delta rotation: the historical tile hands over its full key set as
+    inserts, the delta tiles exactly the set differences."""
+    pipe, state = _make_pipeline(spark, tables, tmp_path)
+    pipe.tile_of = lambda df: F.col("pk") % 4
+    captured = {}
+    pipe.sink = lambda changes, tile, batch_id: captured.__setitem__(tile, {
+        op: {r.pk for r in frame.select("pk").collect()} for op, frame in (
+            ("insert", changes.inserts), ("update", changes.updates),
+            ("delete", changes.deletes))})
+
+    real_can = pipe.ledger.can_discover
+    pipe.ledger.can_discover = lambda ks, tbl, tile: tile != 1 and real_can(ks, tbl, tile)
+    try:
+        assert sorted(pipe.discover()) == [0, 2, 3]
+    finally:
+        pipe.ledger.can_discover = real_can
+    assert sorted(s.tile for s in pipe.replicate()) == [0, 2, 3]
+
+    state["mod"] = 7
+    assert sorted(pipe.discover()) == [0, 1, 2, 3]
+    captured.clear()
+    stats = {s.tile: s for s in pipe.replicate()}
+
+    keys = {r.pk for r in tables["orders"].select(F.col("o_orderkey").alias("pk")).collect()}
+    t0 = {k for k in keys if k % 10 != 0}
+    t1 = {k for k in keys if k % 7 != 0}
+    for tile in range(4):
+        def own(ks, tile=tile):
+            return {k for k in ks if k % 4 == tile}
+        want = ({"insert": own(t1), "update": set(), "delete": set()} if tile == 1 else
+                {"insert": own(t1 - t0), "update": set(), "delete": own(t0 - t1)})
+        assert captured[tile] == want, tile
+        st = stats[tile]
+        assert (st.insertedPrimaryKeys, st.updatedPrimaryKeys, st.deletedPrimaryKeys) == (
+            len(want["insert"]), 0, len(want["delete"])), tile
 
 
 def test_run_loop_with_stop_sentinel(spark, tables, tmp_path):

@@ -441,7 +441,8 @@ def test_opensearch_change_set_write(spark):
         return transport
 
     write_changes_to_opensearch(
-        ChangeSet(inserts=ins, deletes=dele, updates=upd),
+        ChangeSet(inserts=ins, deletes=dele, updates=upd,
+                  counts={"insert": 2, "update": 1, "delete": 1}),
         ["pk"], "docs", transport_factory)
 
     actions = []
@@ -1076,7 +1077,8 @@ def test_funneled_frame_to_opensearch_raises(spark):
     with pytest.raises(SerialSinkInputError,
                        match=r"write_changes_to_opensearch\[index\]"):
         write_changes_to_opensearch(
-            ChangeSet(inserts=bad, deletes=empty, updates=empty),
+            ChangeSet(inserts=bad, deletes=empty, updates=empty,
+                      counts={"insert": 300, "update": 0, "delete": 0}),
             ["pk"], "docs", lambda: (lambda payload: {"errors": False}))
 
 
